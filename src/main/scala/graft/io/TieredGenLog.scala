@@ -297,7 +297,8 @@ final class TieredGenLog(val idxDir: String, components: Seq[String],
           // replay leftovers at/below the boundary that a concurrent
           // sweep is deleting — and a reader whose query needs none of
           // those rows still dies on the listing race (caught live by
-          // LexIngestScale at 50×: an empty-looking root between a
+          // the lexical serve-under-maintenance rehearsal at 50×, SCALING
+          // §"Lexical index family at 50×": an empty-looking root between a
           // sweep and the next shard write threw
           // UNABLE_TO_INFER_SCHEMA into an innocent reader). Explicit
           // paths keep a new-pointer reader's footprint disjoint from

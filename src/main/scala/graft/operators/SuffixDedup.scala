@@ -187,7 +187,8 @@ object SuffixDedup {
   /** One doubling round over the previous round's (doc, off, r) frame:
     * pair each position's id with its off+k partner's, then re-encode the
     * pair to the next round's compact id. Package-visible so the plan-dump
-    * tool and specs can audit the per-round shape the checkpoints hide.
+    * lane (`tools.Explain --suffix`) and specs can audit the per-round
+    * shape the checkpoints hide.
     * Returns the round frame plus the release hook for the pairing cache
     * it retains — call it once the round is materialized.
     *
@@ -217,24 +218,13 @@ object SuffixDedup {
       : (DataFrame, () => Unit) = {
     val shifted = ids.select(col("__doc"),
       (col("__off") - k).as("__off"), col("__r").as("__r2"))
-    val pairedLazy = ids.join(shifted, Seq("__doc", "__off"))
+    val paired = ids.join(shifted, Seq("__doc", "__off"))
       .select(col("__doc"), col("__off"), col("__r"), col("__r2"))
-    // -Dgraft.suffix.pairingCache=false: the r14 lazy form, kept as a
-    // measurement seam so SuffixAb can A/B the two physical shapes
-    // within ONE JVM (cross-session walls on this box swing 3× on
-    // identical code). Results are identical either way.
-    if (sys.props.get("graft.suffix.pairingCache").forall(_ != "false")) {
-      val paired = pairedLazy
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (reencode(paired, struct(col("__r"), col("__r2")), "__rn",
-          minCount = 2L)
-         .select(col("__doc"), col("__off"), col("__rn").as("__r")),
-       () => { paired.unpersist(blocking = false); () })
-    } else
-      (reencode(pairedLazy, struct(col("__r"), col("__r2")), "__rn",
-          minCount = 2L)
-         .select(col("__doc"), col("__off"), col("__rn").as("__r")),
-       () => ())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (reencode(paired, struct(col("__r"), col("__r2")), "__rn",
+        minCount = 2L)
+       .select(col("__doc"), col("__off"), col("__rn").as("__r")),
+     () => { paired.unpersist(blocking = false); () })
   }
 
   /** Re-encode `key` to a compact 8-byte id: every distinct key value one

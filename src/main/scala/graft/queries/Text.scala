@@ -58,10 +58,9 @@ object Text {
   }
 
   /** e2e2b parameterized by its fixture bound: the gate registers the
-    * 397-doc form (bound=400, every doc sf0.01 and sf0.001 share); the
-    * off-toy-scale adjudication (tools/E2e2bScale, round 10) runs the
-    * SAME builder at bound=4000 against sf0.1 to show the deterministic
-    * exact-mode lanes are not tuned to the small fixture. */
+    * 397-doc form (bound=400, every doc sf0.01 and sf0.001 share);
+    * E2e2bGoldenSpec runs the SAME builder at bound=4000 to show the
+    * deterministic exact-mode lanes are not tuned to the small fixture. */
   private[graft] def e2e2b(bound: Int): Q =
     Q("e2e2b_full_prep_exact",
       s"""WITH RECURSIVE

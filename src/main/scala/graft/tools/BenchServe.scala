@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -93,23 +92,13 @@ object BenchServe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
     val contend = sys.env.contains("SPARK_GRAFT_SERVE_CONTEND")
     val swapMode = sys.env.contains("SPARK_GRAFT_SERVE_SWAP")
     require(!(contend && swapMode),
       "BenchServe: CONTEND and SWAP are separate modes with separate " +
         "artifacts — combining them would overwrite one mode's committed " +
         "artifact with the other's measurement; run them separately")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("BenchServe")
     import spark.implicits._
 
     val part = Tables.part(spark, sfDir)
@@ -171,32 +160,13 @@ object BenchServe {
       rows
     }
     // Per-batch attribution for the floating outlier batch (r9 NOTES):
-    // task/exec-GC deltas via listener, driver GC + JIT deltas via MX
-    // beans. Discriminates executor work (task time up), executor GC,
-    // driver full-GC pause, and JIT/codegen compilation (wall up with
-    // everything else flat = driver-side stall outside the JVM's view).
-    val batchTaskMs = new java.util.concurrent.atomic.AtomicLong
-    val batchGcMs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          batchTaskMs.addAndGet(m.executorRunTime)
-          batchGcMs.addAndGet(m.jvmGCTime)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // onTaskEnd delivery is asynchronous on the listener bus: snapshotting
-    // right after processAllAvailable() would attribute late events to the
-    // NEXT batch. Drain before every snapshot (r10 advice); on a timeout,
-    // say so rather than silently printing skewed columns.
-    def drainBus(): Unit =
-      if (!org.apache.spark.graftbridge.ListenerBridge.drain(
-          spark.sparkContext, 10000L))
-        println("SERVE_WARN listener bus drain timed out — task/GC " +
-          "columns may lag one batch")
+    // task/exec-GC deltas via the harness listener (its snapshot drains
+    // the bus, so late task-end events never ride the next batch), driver
+    // GC + JIT deltas via MX beans. Discriminates executor work (task time
+    // up), executor GC, driver full-GC pause, and JIT/codegen compilation
+    // (wall up with everything else flat = driver-side stall outside the
+    // JVM's view).
+    val totals = new Harness.TaskTotals(spark)
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
     def driverGcMs: Long = {
       var s = 0L; gcBeans.forEach(b => s += math.max(b.getCollectionTime, 0)); s
@@ -207,13 +177,13 @@ object BenchServe {
     val familyTasks = scala.collection.mutable.Map
       .empty[Int, scala.collection.mutable.ArrayBuffer[Double]]
     def oneBatch(n: Int, stampFamily: Boolean = true): Double = {
-      batchTaskMs.set(0); batchGcMs.set(0)
+      val m0 = totals.snapshot()
       val gc0 = driverGcMs; val jit0 = jitBean.getTotalCompilationTime
       val t0 = System.nanoTime()
       stream.addData(batchJson(n))
       q.processAllAvailable()
       val wall = (System.nanoTime() - t0) / 1e9
-      drainBus()
+      val m = totals.snapshot() - m0
       // stampFamily=false for swap-window batches: the listener sums
       // EVERY task in the process, so the concurrent generation build's
       // task time would ride the burst family and a healthy run could
@@ -223,9 +193,9 @@ object BenchServe {
       if (stampFamily)
         familyTasks.getOrElseUpdate(n,
           scala.collection.mutable.ArrayBuffer.empty[Double]) +=
-          batchTaskMs.get / 1e3
-      println(f"SERVE_BATCH n=$n wall=$wall%.2f task=${batchTaskMs.get / 1e3}%.1f " +
-        f"execGc=${batchGcMs.get / 1e3}%.1f drvGc=${(driverGcMs - gc0) / 1e3}%.1f " +
+          m.taskMs / 1e3
+      println(f"SERVE_BATCH n=$n wall=$wall%.2f task=${m.taskMs / 1e3}%.1f " +
+        f"execGc=${m.gcMs / 1e3}%.1f drvGc=${(driverGcMs - gc0) / 1e3}%.1f " +
         f"jit=${(jitBean.getTotalCompilationTime - jit0) / 1e3}%.1f s gen=${handle.generation}")
       wall
     }
@@ -372,7 +342,7 @@ object BenchServe {
     contendStop.set(true)
     contendThreads.foreach(_.join(30000))
     q.stop()
-    spark.sparkContext.removeSparkListener(listener)
+    totals.close()
     // one artifact per mode: a diagnostic run must never overwrite the
     // committed idle-box serving number (r10 verdict 1)
     val outName =

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Scale-rehearsal timer for the suffix-array pass over the FULL corpus
   * (the d14 gate query pins a fixed doc_id slice, so it cannot measure
   * corpus scaling — this times `duplicatedRegionsStaged` end to end at
@@ -16,64 +13,22 @@ object SuffixScale {
     // spills once per-partition sort working sets outgrow execution
     // memory at a FIXED 32 partitions — the knob proves the documented
     // rule (partitions ∝ data keeps working sets constant, spill gone).
-    val parts = sys.env.getOrElse("SUFFIX_SHUFFLE_PARTITIONS", "32")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    @volatile var taskTime = 0L; @volatile var gcTime = 0L
-    @volatile var spill = 0L; @volatile var shufRead = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTime += m.executorRunTime; gcTime += m.jvmGCTime
-          spill += m.memoryBytesSpilled + m.diskBytesSpilled
-          shufRead += m.shuffleReadMetrics.totalBytesRead
-        }
-      }
-    })
+    val spark = Harness.session("SuffixScale")
+    sys.env.get("SUFFIX_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
+    val totals = new Harness.TaskTotals(spark)
     val docs = graft.Tables.documents(spark, args.head)
-    // SUFFIX_DIAG=1 (r11, the run3-OOM investigation): after each run —
-    // post release()/clearCache()/System.gc(), i.e. at the point where a
-    // warm JVM SHOULD be back to baseline — print what actually survives:
-    // a jcmd class histogram (top classes by retained bytes), the
-    // retained-persist count, and heap occupancy. Cross-run growth in
-    // these columns names the accumulator the r10 OOM verdict needs.
-    val diag = sys.env.contains("SUFFIX_DIAG")
-    def heapDiag(tag: String): Unit = if (diag) {
-      System.gc(); Thread.sleep(2000); System.gc() // let ContextCleaner drain
-      val mem = java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
-      val persisted = spark.sparkContext.getPersistentRDDs.size
-      println(f"DIAG $tag heapUsed=${mem.getUsed / 1e9}%.2f GB " +
-        f"persistedRDDs=$persisted")
-      try {
-        val pid = ProcessHandle.current().pid()
-        val p = new ProcessBuilder("jcmd", pid.toString,
-          "GC.class_histogram").redirectErrorStream(true).start()
-        val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8")
-          .getLines().toList
-        p.waitFor()
-        out.take(32).foreach(l => println(s"DIAG $tag | $l"))
-      } catch { case e: Exception =>
-        println(s"DIAG $tag histogram unavailable: $e") }
-    }
-    heapDiag("baseline")
     (1 to 3).foreach { i =>
       spark.catalog.clearCache()
       System.gc()
-      val (t0m, g0, s0, r0) = (taskTime, gcTime, spill, shufRead)
+      val before = totals.snapshot()
       val t0 = System.nanoTime()
       val staged = graft.operators.SuffixDedup.duplicatedRegionsStaged(
         docs, "doc_id", "text", minLength = 64)
       val n = staged.df.count()
       staged.release()
       println(f"TIMING d14full_suffix run$i ${(System.nanoTime() - t0) / 1e9}%.2f s regions=$n " +
-        f"[task ${(taskTime - t0m) / 1e3}%.0f s gc ${(gcTime - g0) / 1e3}%.0f s " +
-        f"spill ${(spill - s0) / 1e6} MB shufRead ${(shufRead - r0) / 1e6} MB]")
-      heapDiag(s"after-run$i")
+        (totals.snapshot() - before))
     }
     spark.stop()
   }

@@ -1,16 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 /** The full tri-tenant envelope (r12 verdict 4): SERVING + COMPOSED
-  * INGEST + LIVE MAINTENANCE on one scheduler. MaintainServeScale proved
-  * IVF maintenance under a reader hammer; ComposedIngestScale proved the
-  * dedup → embed → index chain without live readers; this harness runs
-  * both at once — continuous reader threads querying the SAME IVF index
+  * INGEST + LIVE MAINTENANCE on one scheduler. MaintainServeScale proves
+  * IVF maintenance under a reader hammer; this harness runs the
+  * dedup → embed → index chain (SCALING §Composed ingest chain) under
+  * readers — continuous reader threads querying the SAME IVF index
   * the composed chain is appending into and compacting, with the dedup
   * fold firing in the other loop — and records reader_errors (must be
   * 0), per-phase reader walls (p50/p95), and chain walls per batch.
@@ -48,11 +48,7 @@ object TriTenantScale {
     val tiered = args.length > 4 && args(4) == "1"
     val nReaders = if (args.length > 5) args(5).toInt else 2
     val withLex = args.length > 6 && args(6) == "1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("TriTenantScale")
     import spark.implicits._
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -76,7 +72,7 @@ object TriTenantScale {
     if (withLex) graft.jobs.LexIngestJob.seed(
       seed.select(col("doc_id"), tokCol(col("text")).as("toks")),
       "doc_id", "toks", lexDir)
-    println(s"TRITENANT seeded docs=$nSeed cells=$nCents tiered=$tiered " +
+    println(s"TRITENANT seeded root=$root docs=$nSeed cells=$nCents tiered=$tiered " +
       s"lex=$withLex")
 
     // ---- the serving tenant: reader threads hammering the live index.
